@@ -60,13 +60,3 @@ def route(parsed: DataFrame, rules: DataFrame) -> DataFrame:
     )
     return parsed.withColumn("sink", sink).withColumn("month", month)
 
-
-def split_quarantine(routed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantined) — the `remove :exception` split
-    (processing.clj:61 + utils.clj:60-65). Both sides are written; the
-    reference silently dropped failures from the sink but kept them
-    counted — we keep the rows themselves for replay."""
-    return (
-        routed.where(F.col("error").isNull()),
-        routed.where(F.col("error").isNotNull()),
-    )

@@ -11,9 +11,9 @@ idempotent sink. The Spark equivalent here:
     replay idempotent: with ``partitionOverwriteMode=dynamic``, re-running
     day X atomically replaces exactly day X's output directories in every
     sink, never touching other days. This is the Parquet stand-in for
-    Iceberg's ``overwritePartitions()``; with Iceberg jars present, the
-    writer swaps to ``writeTo(tbl).overwritePartitions()`` — same call
-    shape, snapshot-atomic.
+    Iceberg's ``overwritePartitions()``. This package has no Iceberg
+    writer; ``tools/iceberg_probe.py`` records whether the Iceberg jars
+    are available at all.
 * within-batch ``dropDuplicates(message_id)`` per (sink,dt) — the ``_id``
   collapse (es.clj:102-103).
 
@@ -30,12 +30,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 PARTITION_COLS = ["sink", "month", "dt"]
+DEDUP_KEY = "message_id"  # the reference's ES ``_id`` (es.clj:102-103)
 
 
 def write_fanout(
     routed: DataFrame,
     path: str,
-    dedup_key: str = "message_id",
     cross_day_dedup: bool = True,
     batch_dts: list[str] | None = None,
     committed_scope: bool = False,
@@ -64,14 +64,14 @@ def write_fanout(
        and skip even that narrow scan.
 
     Null-key rows (parse failures -> quarantine) are all kept."""
-    w = Window.partitionBy(*PARTITION_COLS).orderBy(F.col(dedup_key).asc_nulls_first())
+    w = Window.partitionBy(*PARTITION_COLS).orderBy(F.col(DEDUP_KEY).asc_nulls_first())
     cleaned = (
         routed.repartition(*[F.col(c) for c in PARTITION_COLS])
-        .withColumn("__prev", F.lag(dedup_key).over(w))
+        .withColumn("__prev", F.lag(DEDUP_KEY).over(w))
         .where(
-            F.col(dedup_key).isNull()
+            F.col(DEDUP_KEY).isNull()
             | F.col("__prev").isNull()
-            | (F.col("__prev") != F.col(dedup_key))
+            | (F.col("__prev") != F.col(DEDUP_KEY))
         )
         .drop("__prev")
     )
@@ -88,7 +88,6 @@ def write_fanout(
         reconcile_cross_day_dupes(
             routed.sparkSession,
             path,
-            dedup_key,
             dts=batch_dts,
             committed_scope=committed_scope,
         )
@@ -97,7 +96,6 @@ def write_fanout(
 def reconcile_cross_day_dupes(
     spark: SparkSession,
     path: str,
-    dedup_key: str = "message_id",
     dts: list[str] | None = None,
     committed_scope: bool = False,
 ) -> int:
@@ -145,10 +143,10 @@ def reconcile_cross_day_dupes(
             )
         else:
             sunk = batch_scan
-    narrow = sunk.select("sink", "month", "dt", dedup_key)
+    narrow = sunk.select("sink", "month", "dt", DEDUP_KEY)
     losers = (
-        narrow.where(F.col(dedup_key).isNotNull())
-        .groupBy("sink", "month", dedup_key)
+        narrow.where(F.col(DEDUP_KEY).isNotNull())
+        .groupBy("sink", "month", DEDUP_KEY)
         .agg(
             F.max("dt").alias("__keep_dt"),
             F.countDistinct("dt").alias("__nd"),
@@ -164,7 +162,7 @@ def reconcile_cross_day_dupes(
         return 0
     affected = [
         (r.sink, r.month, r.dt)
-        for r in narrow.join(losers, on=["sink", "month", dedup_key])
+        for r in narrow.join(losers, on=["sink", "month", DEDUP_KEY])
         .where(F.col("dt") != F.col("__keep_dt"))
         .select("sink", "month", "dt")
         .distinct()
@@ -177,7 +175,7 @@ def reconcile_cross_day_dupes(
     in_affected = part.isin([F.struct(*[F.lit(v) for v in a]) for a in affected])
     before = sunk.where(in_affected)
     keep = (
-        before.join(losers, on=["sink", "month", dedup_key], how="left")
+        before.join(losers, on=["sink", "month", DEDUP_KEY], how="left")
         .where(F.col("__keep_dt").isNull() | (F.col("dt") == F.col("__keep_dt")))
         .drop("__keep_dt")
         .localCheckpoint()  # materialize before overwriting what we read

@@ -240,9 +240,69 @@ def test_live_progress_observations_and_heartbeats(spark, tmp_path):
     assert sum(h.rows for h in hbs) == res.rows_in == 500
     assert sum(h.quarantined for h in hbs) == res.quarantined
     assert len(hbs) >= 2  # one per batch (group_size splits the days)
+    # per-batch walls, not time since run start: they sum within the run
+    assert sum(h.wall_ms for h in hbs) <= res.wall_ms
     for key in list(tracker._obs):
         m = tracker.batch_metrics(key)
         assert m["rows"] > 0
+
+
+def test_crash_between_sink_commit_and_ledger_is_exactly_once(
+    spark, tmp_path, monkeypatch
+):
+    """The ledger rename is the commit point (checkpoint.py): a run killed
+    after batch k's sink write committed but before its ledger entries
+    landed, then rerun, ends in the same sink rows, committed counts and
+    ledger as an uninterrupted run."""
+    from logprocessor_spark.job import _committed_counts
+
+    base = str(tmp_path)
+    write_pages_partitioned(gen_pages(spark, 500, seed=3), f"{base}/pages")
+    clean = run_pipeline(
+        spark, f"{base}/pages", f"{base}/clean", run_id="clean", group_size=20
+    )
+    dts = clean.processed_partitions
+    assert len(dts) > 20  # batch k=1 exists
+    crash_dt = dts[20]  # first day of batch k=1
+
+    mark_done = Ledger.mark_done
+
+    def crashing_mark_done(self, run_id, partition_key, rows_in, rows_out):
+        if partition_key == crash_dt:
+            raise RuntimeError("killed after sink commit")
+        mark_done(self, run_id, partition_key, rows_in, rows_out)
+
+    monkeypatch.setattr(Ledger, "mark_done", crashing_mark_done)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_pipeline(
+            spark, f"{base}/pages", f"{base}/out", run_id="crash", group_size=20
+        )
+    monkeypatch.undo()
+    assert crash_dt not in Ledger(f"{base}/out/ledger").done_partitions()
+    rerun = run_pipeline(
+        spark, f"{base}/pages", f"{base}/out", run_id="rerun", group_size=20
+    )
+    assert rerun.processed_partitions == dts[20:]
+
+    def routed_rows(out):
+        return set(
+            read_sink(spark, f"{out}/routed")
+            .select("sink", "month", "dt", "message_id", "url")
+            .collect()
+        )
+
+    def ledger_rows(out):
+        return sorted(
+            (e["partition_key"], e["status"], e["rows_in"], e["rows_out"])
+            for e in Ledger(f"{out}/ledger").entries()
+        )
+
+    out, ref = f"{base}/out", f"{base}/clean"
+    assert routed_rows(out) == routed_rows(ref)
+    assert _committed_counts(spark, f"{out}/routed", set(dts)) == _committed_counts(
+        spark, f"{ref}/routed", set(dts)
+    )
+    assert ledger_rows(out) == ledger_rows(ref)
 
 
 def test_search_wildcard_terms(spark, pipe):

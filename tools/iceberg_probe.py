@@ -1,7 +1,7 @@
 """Reproducible Iceberg-availability probe (r4 VERDICT #7): try to stand
 up a real Iceberg catalog and CREATE TABLE ... USING iceberg in this
 environment, and record the outcome so the Parquet-fallback claim in
-``sinks_backend.py`` is evidence, not assertion. Writes/refreshes
+``sinks.py`` is evidence, not assertion. Writes/refreshes
 BENCH/ICEBERG_PROBE.md::
 
     python tools/iceberg_probe.py
@@ -70,12 +70,12 @@ and attempts `CREATE TABLE ... USING iceberg`.
   runtime jar cannot be vendored in.
 - Probe outcome: **{outcome}**
 
-Consequence: every sink in this repo runs the Parquet-fallback backend.
-The backend seam is contract-tested (`logprocessor_spark/sinks_backend.py`,
-`tests/test_sinks_backend.py`) so an Iceberg-backed implementation swaps
-in behind the same interface on a cluster that ships
-`iceberg-spark-runtime`; the real `MERGE INTO` path remains unexercised
-here by environment, not by design.
+Consequence: every sink in this repo is the Parquet fallback in
+`logprocessor_spark/sinks.py`: dynamic partition overwrite plus a
+post-commit reconcile pass stand in for Iceberg `overwritePartitions()` /
+`MERGE INTO`. Its upsert contract is tested in `tests/test_sinks.py` and
+`tests/test_pipeline_e2e.py`. No Iceberg writer exists in the repo; one
+would need `iceberg-spark-runtime` on the cluster and is untested here.
 """)
     print(outcome)
 

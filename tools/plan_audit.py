@@ -20,6 +20,13 @@ import sys
 sys.path.insert(0, ".")
 
 CHECKS = []  # (name, passed, detail)
+# physical nodes that run Python over rows (UDFs, pandas/Arrow maps);
+# "MapInArrow" also matches the older "PythonMapInArrow" node name
+PY_EVAL_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow")
+
+
+def python_eval_nodes(plan: str) -> list[str]:
+    return [n for n in PY_EVAL_NODES if n in plan]
 
 
 def check(name: str, cond: bool, detail: str = "") -> None:
@@ -91,7 +98,7 @@ def main() -> None:
     p = plan_of(parsed)
     # codegen'd operators render as "*(n) Op" in the plan string
     check("parse: whole-stage codegen", "WholeStageCodegen" in p or "*(1)" in p)
-    check("parse: no Python eval in hot path", "BatchEvalPython" not in p and "ArrowEvalPython" not in p)
+    check("parse: no Python eval in hot path", not python_eval_nodes(p))
 
     # fan-out write path: exactly one exchange (fused dedup)
     from logprocessor_spark.functions.parse import parse_pages
@@ -111,6 +118,11 @@ def main() -> None:
     )
     p = plan_of(cleaned)
     check("fanout+dedup: single exchange", p.count("Exchange") == 1, f"exchanges={p.count('Exchange')}")
+    check(
+        "routed batch: no Python eval (parse -> route -> dedup)",
+        not python_eval_nodes(p),
+        f"found={python_eval_nodes(p)}",
+    )
 
     # salted agg: two-phase = exactly two exchanges, partial aggregation present
     p = plan_of(harness.q_salted_agg_parity(spark, sf_dir))
@@ -401,8 +413,7 @@ def main() -> None:
     p = plan_of(harness.q_lm_doc_perplexity(spark, sf_dir))
     check(
         "lm_doc_perplexity: broadcast LM lookup, zero Python eval",
-        "BroadcastHashJoin" in p and "BatchEvalPython" not in p
-        and "ArrowEvalPython" not in p,
+        "BroadcastHashJoin" in p and not python_eval_nodes(p),
         f"bhj={p.count('BroadcastHashJoin')}",
     )
 
@@ -413,8 +424,7 @@ def main() -> None:
     p = plan_of(harness.q_kn_4gram_lm(spark, sf_dir))
     check(
         "kn_4gram_lm: join-back plan, zero Python eval, top-k",
-        "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-        and "TakeOrderedAndProject" in p,
+        not python_eval_nodes(p) and "TakeOrderedAndProject" in p,
     )
 
     # CCNet-exact configuration: the 5-gram scorer's model lookup joins
@@ -422,8 +432,7 @@ def main() -> None:
     p = plan_of(harness.q_lm_doc_perplexity_5g(spark, sf_dir))
     check(
         "lm_doc_perplexity_5g: zero Python eval, no nested loop",
-        "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-        and "CartesianProduct" not in p,
+        not python_eval_nodes(p) and "CartesianProduct" not in p,
     )
 
     # Bloom probe: the filter is a packed literal bitset and the k bit
@@ -433,7 +442,7 @@ def main() -> None:
     check(
         "bloom_crawl_probe: zero-exchange scan-side probe",
         "Exchange" not in p and "Join" not in p
-        and "BatchEvalPython" not in p,
+        and not python_eval_nodes(p),
         f"exchanges={p.count('Exchange')}",
     )
 
